@@ -200,6 +200,29 @@ def _dry_run_check(cmd: LoadCommand) -> list[tuple[str, bool, str]]:
     return checks
 
 
+def _sink_for(dest: str | None, cmd: LoadCommand):
+    """The ``ExecutionContext.sink`` that lands a single-table load in
+    ``dest``: a parquet directory, or a ``postgresql://`` target through
+    the COPY sink (live server required; ``WITH truncate`` empties the
+    table first and the command's ``SET`` clause applies per stream)."""
+    if not dest:
+        return None
+    if not dest.startswith(("postgresql://", "pgsql://", "postgres://")):
+        return lambda df, _table: df.write.mode("overwrite").parquet(dest)
+
+    def copy_sink(df, table: str) -> int:
+        from pgloader_spark.sources import pg_live
+
+        if cmd.options.get("truncate"):
+            from pgloader_spark.sources.pgwire import PGConn
+
+            with PGConn(dest) as conn:
+                conn.query(f"TRUNCATE {pg_live.quote_qualified(table)}")
+        return pg_live.write_pg_copy(df, dest, table, settings=cmd.gucs)
+
+    return copy_sink
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(
         prog="pgloader_spark",
@@ -493,51 +516,14 @@ def main(argv: list[str] | None = None) -> int:
                 root_dir=args.root_dir,
                 on_error_stop=args.on_error_stop,
                 sql_runner=sql_runner,
+                sink=_sink_for(args.target or one_cmd.target, one_cmd),
             )
             if one_cmd.source_kind == "database":
                 from pgloader_spark.plans.executor import execute_database
 
                 reports.extend(execute_database(ctx, one_cmd))
                 continue
-            report = execute(ctx, one_cmd)
-            # parquet-dir targets land the data; a postgresql:// target
-            # goes through the COPY sink (live server required); a
-            # .load file's own INTO target sinks the same way
-            dest = args.target or one_cmd.target
-            is_pg = bool(dest) and dest.startswith(
-                ("postgresql://", "pgsql://", "postgres://")
-            )
-            if dest and not is_pg:
-                report.result.write.mode("overwrite").parquet(dest)
-            elif dest:
-                from pgloader_spark.sources.pg_live import (
-                    quote_qualified,
-                    write_pg_copy,
-                )
-
-                if one_cmd.options.get("truncate"):
-                    sql_runner(f"TRUNCATE {quote_qualified(report.table)}")
-                try:
-                    write_pg_copy(report.result, dest, report.table)
-                finally:
-                    # WITH drop indexes: rebuild even when the COPY
-                    # fails — the statements are duplicate-tolerant,
-                    # and a failed load must not leave the target
-                    # stripped of its indexes/constraints
-                    if report.post_load:
-                        from pgloader_spark.plans.orchestrate import (
-                            run_post_load,
-                        )
-
-                        run_post_load(
-                            dest, report.post_load, transactional=False
-                        )
-                        if report.post_load_file:
-                            try:
-                                os.unlink(report.post_load_file)
-                            except OSError:
-                                pass
-            reports.append(report)
+            reports.append(execute(ctx, one_cmd))
 
         if args.regress:
             from pgloader_spark.plans.regress import (

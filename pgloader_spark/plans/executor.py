@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import logging
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 log = logging.getLogger(__name__)
 
@@ -38,18 +38,18 @@ from pgloader_spark.sources.ixf import read_ixf
 @dataclass
 class LoadReport:
     """Per-table accounting, mirroring the reference's summary rows
-    (src/utils/state.lisp:11-40): read / loaded / rejected counts."""
+    (src/utils/state.lisp:11-40): read / loaded / rejected counts.
+    ``errors`` is the rows the validation split rejected plus, when
+    the sink returns the count the target accepted, the rows it
+    refused; ``read = loaded + errors``."""
 
     table: str
     read: int = 0
     loaded: int = 0
     errors: int = 0
+    # the frame that was landed: the sink's input when ctx.sink is
+    # set, else the cached good rows for the caller to consume
     result: DataFrame | None = None
-    # index-rebuild DDL deferred past a caller-side sink (WITH drop
-    # indexes when the caller, not ctx.sink, lands the data); the
-    # on-disk recovery copy survives a crash before the rebuild runs
-    post_load: list[str] = field(default_factory=list)
-    post_load_file: str | None = None
     # where the load actually landed (qualified PG table or parquet
     # path) — recorded by the writer so verify load never re-derives it
     target_path: str | None = None
@@ -66,11 +66,14 @@ class ExecutionContext:
     root_dir: str = "/tmp/pgloader_spark"
     on_error_stop: bool = False
     sql_runner: object | None = None  # callable(sql) for BEFORE/AFTER LOAD DO
-    # callable(df, table) that runs the terminal action (parquet write,
-    # COPY, ...).  When provided, execute() counts rows DURING that
-    # action via an Observation — one distributed pass, the way the
-    # reference counts while it COPYs (src/pg-copy/copy-rows-in-
-    # batch.lisp) — instead of cache + count + caller-side sink.
+    # callable(df, table) that lands the rows (parquet write, COPY,
+    # ...) — the only landing path of a single-table load.  execute()
+    # counts rows DURING that action via an Observation — one
+    # distributed pass, the way the reference counts while it COPYs
+    # (src/pg-copy/copy-rows-in-batch.lisp) — and an int return is
+    # taken as the rows the target accepted.  WITH drop indexes only
+    # applies with a sink: execute() rebuilds after it returns.
+    # Without a sink, execute() caches the good rows and counts them.
     sink: object | None = None
 
 
@@ -332,9 +335,6 @@ def project(df: DataFrame, cmd: LoadCommand) -> DataFrame:
             from pgloader_spark.operators.projection import col_ref
 
             e = field_cols.get(name, col_ref(name))
-        cast = _PG_TO_SPARK_CAST.get((col.cast_to or "").split("(")[0].strip().lower())
-        if cast:
-            e = e.try_cast(cast)
         exprs.append(e.alias(col.name))
     return df.select(*exprs)
 
@@ -370,14 +370,17 @@ def apply_column_casts(df: DataFrame, cmd: LoadCommand) -> DataFrame:
 
 
 def validation_rules(cmd: LoadCommand) -> list[ColumnRule]:
-    """Target column types -> try-cast validity rules (§7 step 7)."""
+    """Target column types -> try-cast validity rules (§7 step 7).
+
+    The one place a column's target-type cast is decided: the split
+    checks the raw projected value, so a reject keeps its source text,
+    and casts the good side."""
     rules = []
     for col in cmd.columns:
         base = (col.cast_to or "").split("(")[0].strip().lower()
         cast = _PG_TO_SPARK_CAST.get(base)
         if cast:
-            # projection already cast; validation is on the projected col
-            rules.append(ColumnRule(col.name))
+            rules.append(ColumnRule(col.name, cast_to=cast))
     return rules
 
 
@@ -1218,14 +1221,12 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
 
     df = read_source(spark, cmd)
     projected = project(df, cmd)
-    if cmd.cast_rules:
-        projected = apply_column_casts(projected, cmd)
 
     rules = validation_rules(cmd)
     if rules:
         res = load_with_isolation(
             projected,
-            [ColumnRule(r.name, not_null=False) for r in rules],
+            rules,
             ctx.root_dir,
             "pgloader",
             table,
@@ -1235,14 +1236,19 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
         report.errors = res.error_count or 0
     else:
         good = projected
+    if cmd.cast_rules:
+        # CAST rules see the typed values of the validated rows
+        good = apply_column_casts(good, cmd)
 
     # WITH drop indexes: drop before the load, rebuild after — the
-    # reference's kernel for fast data-only loads into existing tables
+    # reference's kernel for fast data-only loads into existing tables.
+    # Only a sink lands the data, so only with one is there a rebuild
     rebuild_stmts: list[str] = []
     rebuild_file = None
     tgt_dsn = cmd.target or ""
     if (
-        (cmd.options.get("drop_indexes") or cmd.options.get("reindex"))
+        ctx.sink is not None
+        and (cmd.options.get("drop_indexes") or cmd.options.get("reindex"))
         and tgt_dsn.startswith(("postgresql://", "pgsql://", "postgres://"))
     ):
         from pgloader_spark.sources.pg_live import capture_and_drop_indexes
@@ -1269,20 +1275,20 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
             ret = ctx.sink(good, table)
             n_seen = int(obs.get["n"])
             if isinstance(ret, int):
-                # a counting sink (write_pg_copy with reject isolation)
-                # reports what the server actually accepted; the delta is
-                # server-side rejects (fk-reject.load, overflow.load)
+                # a counting sink (write_pg_copy) reports what the
+                # server actually accepted; under reject isolation the
+                # delta is server-side rejects (fk-reject.load,
+                # overflow.load)
                 report.loaded = ret
                 report.errors += n_seen - ret
             else:
                 report.loaded = n_seen
-            report.result = good
         else:
             good = good.cache()
             report.loaded = good.count()
-            report.result = good
+        report.result = good
     finally:
-        if rebuild_stmts and ctx.sink is not None:
+        if rebuild_stmts:
             # the data landed (or failed) inside this call: rebuild
             # NOW, success or not — the statements are
             # duplicate-tolerant (IF NOT EXISTS / run_post_load skips
@@ -1297,13 +1303,6 @@ def execute(ctx: ExecutionContext, cmd: LoadCommand) -> LoadReport:
                 except OSError:
                     pass
     report.read = report.loaded + report.errors
-
-    if rebuild_stmts and ctx.sink is None:
-        # the caller sinks report.result itself (cli write_pg_copy):
-        # hand the rebuild DDL back to run after that COPY; the
-        # recovery script stays on disk until the caller succeeds
-        report.post_load = rebuild_stmts
-        report.post_load_file = rebuild_file
 
     for stmt in cmd.after_load:
         if ctx.sql_runner:

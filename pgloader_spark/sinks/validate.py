@@ -29,15 +29,14 @@ from pyspark.sql import functions as F
 class ColumnRule:
     """A validity predicate + the cast applied when valid.
 
-    ``check``: SQL type name to try-cast to (null-on-fail), or None to
-    accept anything. ``not_null``: reject NULLs post-cast (models
-    target NOT NULL constraints). ``custom``: extra Column predicate.
+    ``cast_to``: Spark type name to try-cast to (null-on-fail), or None
+    to accept anything. ``not_null``: reject NULLs post-cast (models
+    target NOT NULL constraints).
     """
 
     name: str
     cast_to: str | None = None
     not_null: bool = False
-    custom: Column | None = None
 
     def valid_expr(self, c: Column) -> Column:
         ok = F.lit(True)
@@ -47,8 +46,6 @@ class ColumnRule:
         if self.not_null:
             cast_c = c.try_cast(self.cast_to) if self.cast_to else c
             ok = ok & cast_c.isNotNull()
-        if self.custom is not None:
-            ok = ok & self.custom
         return ok
 
 

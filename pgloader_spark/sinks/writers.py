@@ -126,20 +126,6 @@ def write_copy_files(df: DataFrame, path: str, num_files: int | None = None) -> 
     lines.write.mode("overwrite").text(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """The lake-native sink (not in the reference; the 100 TB path).
-    Partition columns turn downstream filters into partition pruning."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def export_shuffled(
     df: DataFrame,
     path: str,

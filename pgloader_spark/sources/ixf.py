@@ -48,19 +48,6 @@ IXF_DATE = 384
 IXF_TIME = 388
 IXF_TIMESTAMP = 392
 
-TYPE_NAMES = {
-    IXF_CHAR: "character",
-    IXF_VARCHAR: "varchar",
-    IXF_SMALLINT: "smallint",
-    IXF_INTEGER: "integer",
-    IXF_BIGINT: "bigint",
-    IXF_DECIMAL: "decimal",
-    IXF_FLOAT: "float",
-    IXF_DATE: "date",
-    IXF_TIME: "time",
-    IXF_TIMESTAMP: "timestamp",
-}
-
 # fixed on-disk widths for types whose IXFCLENG is blank
 _FIXED_LEN = {
     IXF_SMALLINT: 2,
@@ -266,17 +253,6 @@ def read_ixf(
         f"`{c.name}` {spark_types.get(c.type_code, 'string')}" for c in cols
     )
     return spark.createDataFrame(rows, schema)
-
-
-def ixf_source_fields(path: str):
-    from pgloader_spark.casting import SourceField
-
-    with open(path, "rb") as fh:
-        data = fh.read()
-    return [
-        SourceField(c.name, TYPE_NAMES.get(c.type_code, "varchar"), nullable=c.nullable)
-        for c in parse_columns(data)
-    ]
 
 
 # ---------------------------------------------------------------------------

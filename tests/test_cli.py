@@ -175,3 +175,31 @@ def test_summary_filename_with_extension(spark, tmp_path):
                  "--root-dir", str(root), "--summary", "sum.copy"]) == 0
     line = (root / "sum.copy").read_text().strip().split("\n")[0]
     assert line.split("\t")[0] == "people" and line.split("\t")[2] == "2"
+
+
+def test_second_identical_load_reads_the_new_files(spark, tmp_path):
+    """The same .load run twice in one session lands what the source
+    holds at the second run — the first run leaves no cached plan
+    behind for the second to reuse."""
+    import pyarrow.parquet as pq
+
+    from pgloader_spark.cli import main
+
+    csv = tmp_path / "r.csv"
+    load = tmp_path / "r.load"
+    out_dir = tmp_path / "out.parquet"
+    load.write_text(
+        f"LOAD CSV FROM '{csv}' (id, name)\n"
+        f"  INTO '{out_dir}' TARGET TABLE people (id bigint, name)\n"
+        "  WITH fields terminated by ',';\n"
+    )
+    argv = [str(load), "--master", "local[2]", "-q",
+            "--root-dir", str(tmp_path / "root")]
+    csv.write_text("1,a\n2,b\n")
+    assert main(argv) == 0
+    csv.write_text("3,c\n4,d\n5,e\n")
+    assert main(argv) == 0
+    got = sorted(pq.read_table(str(out_dir)).to_pylist(), key=lambda r: r["id"])
+    assert got == [
+        {"id": 3, "name": "c"}, {"id": 4, "name": "d"}, {"id": 5, "name": "e"}
+    ]

@@ -21,13 +21,20 @@ LOAD CSV
 oops,carol,z
 """
     report = run_command_text(spark, cmd, root_dir=str(tmp_path))
-    # column list projects (a, c) and casts a -> bigint; bad row "oops"
-    # becomes NULL via try-cast (no not-null rule), so 3 rows load
-    assert report.loaded == 3
-    rows = sorted(report.result.collect(), key=lambda r: (r["a"] is None, r["a"]))
-    assert rows[0]["a"] == 1 and rows[0]["c"] == "x"
-    assert rows[2]["a"] is None
+    # column list projects (a, c) and casts a -> bigint; "oops" is no
+    # bigint, so — like PostgreSQL's COPY — that row is rejected with
+    # its source text, not loaded as NULL
+    assert (report.read, report.loaded, report.errors) == (3, 2, 1)
+    rows = sorted(report.result.collect(), key=lambda r: r["a"])
+    assert [(r["a"], r["c"]) for r in rows] == [(1, "x"), (2, "y")]
     assert report.result.columns == ["a", "c"]
+    dat = tmp_path / "pgloader" / "people.dat"
+    lines = [
+        ln for f in sorted(dat.glob("part-*")) for ln in f.read_text().splitlines()
+    ]
+    assert lines == ["oops\tz"]
+    log = (tmp_path / "pgloader" / "people.log").glob("part-*")
+    assert "people: a: invalid bigint" in "".join(f.read_text() for f in log)
 
 
 def test_csv_file_with_skip_and_fields(spark, tmp_path):

@@ -34,7 +34,14 @@ def test_corpus_is_nonempty():
     assert len(_corpus()) >= 60
 
 
-@pytest.mark.parametrize("path", _corpus(), ids=os.path.basename)
+# ids from the list itself: with an empty corpus pytest hands an id
+# callable its NOTSET placeholder, and collection errors out
+_CORPUS = _corpus()
+
+
+@pytest.mark.parametrize(
+    "path", _CORPUS, ids=[os.path.basename(p) for p in _CORPUS]
+)
 def test_parse_reference_load_file(path):
     text = open(path, encoding="utf-8", errors="replace").read()
     cmd = parse_load(text)

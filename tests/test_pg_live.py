@@ -2026,10 +2026,13 @@ def test_capture_and_drop_indexes_roundtrip(seeded):
             c.query(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_load_csv_with_drop_indexes_rebuilds(seeded, spark, tmp_path):
+def test_load_csv_with_drop_indexes_rebuilds(seeded, spark, tmp_path, capsys):
     """File load WITH truncate, drop indexes: target indexes drop
     before the COPY and rebuild after it (docs/ref/pgsql.rst 'drop
-    indexes')."""
+    indexes').  A malformed bigint is rejected into the reject file
+    with its source text and counted in the summary's errors."""
+    import json
+
     from pgloader_spark.cli import main
 
     with PGConn(seeded) as c:
@@ -2038,15 +2041,24 @@ def test_load_csv_with_drop_indexes_rebuilds(seeded, spark, tmp_path):
         c.query("CREATE INDEX di_people_name_idx ON di_people (name)")
         c.query("INSERT INTO di_people VALUES (99, 'stale')")
     csv = tmp_path / "di.csv"
-    csv.write_text("1,ada\n2,grace\n")
+    csv.write_text("1,ada\nx9,bad\n2,grace\n")
     load = tmp_path / "di.load"
     load.write_text(
         f"LOAD CSV FROM '{csv}' (id, name)\n"
-        f"  INTO {seeded}?di_people (id, name)\n"
+        f"  INTO {seeded}?di_people (id bigint, name)\n"
         "  WITH truncate, drop indexes, fields terminated by ',';\n"
     )
-    assert main([str(load), "--master", "local[4]",
+    capsys.readouterr()
+    assert main([str(load), "--master", "local[4]", "--summary", "json",
                  "--root-dir", str(tmp_path / "rej")]) == 0
+    out = capsys.readouterr().out
+    summary = json.loads([ln for ln in out.splitlines() if ln.startswith("{")][-1])
+    row = summary["tables"][0]
+    assert (row["read"], row["loaded"], row["errors"]) == (3, 2, 1)
+    dat = tmp_path / "rej" / "pgloader" / "di_people.dat"
+    assert [
+        ln for f in sorted(dat.glob("part-*")) for ln in f.read_text().splitlines()
+    ] == ["x9\tbad"]
     with PGConn(seeded) as c:
         _, rows = c.query("SELECT id, name FROM di_people ORDER BY id")
         assert rows == [("1", "ada"), ("2", "grace")]
@@ -2058,6 +2070,37 @@ def test_load_csv_with_drop_indexes_rebuilds(seeded, spark, tmp_path):
         # the rebuilt PK still enforces
         with pytest.raises(PGError, match="23505"):
             c.query("INSERT INTO di_people VALUES (1, 'dup')")
+
+
+def test_load_csv_copy_honours_set_clause(seeded, spark, tmp_path):
+    """The CLI's COPY sink runs each stream under the command's SET
+    clause: a column the load omits takes its DEFAULT from the
+    session's application_name."""
+    from pgloader_spark.cli import main
+
+    with PGConn(seeded) as c:
+        c.query("DROP TABLE IF EXISTS set_people")
+        c.query(
+            "CREATE TABLE set_people (id bigint, name text,"
+            " loaded_by text DEFAULT current_setting('application_name'))"
+        )
+    csv = tmp_path / "set.csv"
+    csv.write_text("1,ada\n2,grace\n")
+    load = tmp_path / "set.load"
+    load.write_text(
+        f"LOAD CSV FROM '{csv}' (id, name)\n"
+        f"  INTO {seeded}?set_people (id bigint, name)\n"
+        "  WITH fields terminated by ','\n"
+        "  SET application_name = 'set_clause_load';\n"
+    )
+    assert main([str(load), "--master", "local[2]", "-q",
+                 "--root-dir", str(tmp_path / "rej")]) == 0
+    with PGConn(seeded) as c:
+        _, rows = c.query(
+            "SELECT id, loaded_by FROM set_people ORDER BY id"
+        )
+        assert rows == [("1", "set_clause_load"), ("2", "set_clause_load")]
+        c.query("DROP TABLE set_people")
 
 
 def test_run_parallel_indexes_builds_concurrently(seeded):
